@@ -367,25 +367,28 @@ def vlink_batch(
     rel): identical active edge (weight within 1e-12) → no-op; changed
     weight → soft-close the old row + append the new version; absent →
     append. Duplicate keys within one batch resolve last-wins (the
-    sequential-VLink outcome).
+    sequential-VLink outcome). A link may carry its own time as a fifth
+    element, ``(src, dst, rel, weight, at)``, used instead of ``now``
+    for its close/insert — how AOF replay applies a run of links logged
+    at different times in one call.
 
     One MERGE statement's read-side — a broadcast join against the
     (config-sized) link batch to conditionally close old versions, and
     one anti-join to decide the inserts. NO driver round-trip per edge
     (the per-edge ``collect()`` the single-link facade used to pay).
     Self-links are rejected (http_handlers.go:880)."""
-    for s, d, _r, _w in links:
+    for s, d, *_ in links:
         if s == d:
             raise SelfLinkError(
                 "cannot link a node to itself (source_id equals target_id)"
             )
     # last-wins within the batch
-    dedup: dict[tuple, float] = {}
-    for s, d, r, w in links:
-        dedup[(s, d, r)] = float(w)
+    dedup: dict[tuple, tuple[float, int]] = {}
+    for s, d, r, w, *at in links:
+        dedup[(s, d, r)] = (float(w), at[0] if at else now)
     new = index.spark.createDataFrame(
-        [(s, d, r, w) for (s, d, r), w in dedup.items()],
-        "src string, dst string, rel string, new_weight double",
+        [(s, d, r, w, at) for (s, d, r), (w, at) in dedup.items()],
+        "src string, dst string, rel string, new_weight double, at bigint",
     )
     keys = ["src", "dst", "rel"]
     changed = (
@@ -397,8 +400,7 @@ def vlink_batch(
         index.edges.join(F.broadcast(new), keys, "left")
         .select(
             *keys, "weight", "created_at",
-            F.when((F.col("deleted_at") == 0) & changed,
-                   F.lit(now).cast("long"))
+            F.when((F.col("deleted_at") == 0) & changed, F.col("at"))
             .otherwise(F.col("deleted_at")).alias("deleted_at"),
         )
     )
@@ -414,7 +416,7 @@ def vlink_batch(
         )
         .select(
             *keys, F.col("new_weight").alias("weight"),
-            F.lit(now).cast("long").alias("created_at"),
+            F.col("at").alias("created_at"),
             F.lit(0).cast("long").alias("deleted_at"),
         )
     )

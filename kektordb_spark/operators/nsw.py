@@ -315,7 +315,15 @@ def nng_descent_build(
 
     ``sig_source``: temp-view name of a persisted seed-signature
     relation (vec_id, tbl, sig) under the NNG_LSH lattice; defaults to
-    deriving the signatures inline from ``emb``."""
+    deriving the signatures inline from ``emb``.
+
+    Session state: for the duration of the call this switches the
+    session-wide ``spark.sql.constraintPropagation.enabled`` off
+    (restored on return or failure) and registers ``_nng_*`` temp
+    views. It is the only tables.INDEX_LAYER builder that touches
+    session state, which the concurrent index build relies on: plans
+    of builders running beside it lose only inferred filters, never
+    results, and no other builder reads a ``_nng_*`` view."""
 
     def _ckpt(df: DataFrame) -> DataFrame:
         # alias-project BEFORE checkpointing: a LogicalRDD inherits its

@@ -32,6 +32,8 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
+import uuid
 import zlib
 
 from pyspark.sql import SparkSession
@@ -47,9 +49,7 @@ _REPLAY = {
     "add_batch": lambda ix, r: api.vadd_batch(
         ix, r["items"], now=r["now"], mode=r.get("mode", "upsert")),
     "delete": lambda ix, r: api.vdelete(ix, r["ids"], now=r["now"]),
-    "link": lambda ix, r: api.vlink(
-        ix, r["src"], r["dst"], r["rel"], now=r["now"],
-        weight=r.get("weight", 1.0), inverse=r.get("inverse")),
+    "link": lambda ix, r: _link_run(ix, _link_rows(r)),
     "unlink": lambda ix, r: api.vunlink(
         ix, r["src"], r["dst"], r["rel"], now=r["now"],
         hard=r.get("hard", False)),
@@ -57,6 +57,20 @@ _REPLAY = {
         ix, r["id"], r["props"], now=r["now"]),
     "reinforce": lambda ix, r: api.vreinforce(ix, r["ids"], now=r["now"]),
 }
+
+
+def _link_rows(r: dict) -> list[tuple]:
+    """The (src, dst, rel, weight, now) rows one logged ``link`` adds,
+    its inverse edge included (api.vlink)."""
+    w = r.get("weight", 1.0)
+    rows = [(r["src"], r["dst"], r["rel"], w, r["now"])]
+    if r.get("inverse"):
+        rows.append((r["dst"], r["src"], r["inverse"], w, r["now"]))
+    return rows
+
+
+def _link_run(index: api.Index, rows: list[tuple]) -> api.Index:
+    return api.vlink_batch(index, rows, now=rows[-1][4]) if rows else index
 
 
 def _canon(payload: dict) -> bytes:
@@ -144,13 +158,30 @@ class AofLog:
 
     def replay(self, index: api.Index, from_seq: int = 0) -> api.Index:
         """Apply every intact record with seq > from_seq through the
-        public API verbs, in order."""
+        public API verbs, in order.
+
+        A run of consecutive ``link`` records is applied as ONE
+        ``api.vlink_batch`` whose rows keep their own logged times:
+        each vlink_batch reads the edge table twice, so one call per
+        replayed link doubled the plan with every link (recovery time
+        exponential in the link count). A run is cut where a (src,
+        dst, rel) key repeats; links with distinct keys never see each
+        other's rows, so the batch outcome is exactly the sequential
+        one."""
+        run: list[tuple] = []
         for rec in self.records():
             if rec["seq"] <= from_seq:
                 continue
             body = rec["payload"]
-            index = _REPLAY[body["op"]](index, body)
-        return index
+            if body["op"] != "link":
+                index = _REPLAY[body["op"]](_link_run(index, run), body)
+                run = []
+                continue
+            rows = _link_rows(body)
+            if {r[:3] for r in rows} & {r[:3] for r in run}:
+                index, run = _link_run(index, run), []
+            run += rows
+        return _link_run(index, run)
 
     def rewrite(self, covered_seq: int) -> None:
         """Drop records at or <= covered_seq (they are inside a
@@ -167,12 +198,34 @@ def save_snapshot(index: api.Index, directory: str,
                   aof: AofLog | None = None) -> None:
     """Persist the FULL index state (including tombstones — replaying
     an unlink over a lost tombstone would resurrect semantics) plus a
-    manifest with the catalog config and the covered AOF position."""
+    manifest with the catalog config and the covered AOF position.
+
+    ``directory`` may be the snapshot ``index`` was loaded from
+    (compaction in place): both tables are written in full to sibling
+    temp dirs before either replaces its old dir, since either plan may
+    still read the old files. The manifest is swapped in last. The
+    passed-in index reads replaced files afterwards; continue from
+    ``load_snapshot(spark, directory)``."""
     os.makedirs(directory, exist_ok=True)
-    index.vectors.write.mode("overwrite").parquet(
-        os.path.join(directory, "vectors"))
-    index.edges.write.mode("overwrite").parquet(
-        os.path.join(directory, "edges"))
+    tag = uuid.uuid4().hex
+    staged = {}
+    try:
+        for part in ("vectors", "edges"):
+            staged[part] = os.path.join(directory, f".{part}.{tag}.tmp")
+            getattr(index, part).write.parquet(staged[part])
+    except BaseException:
+        for tmp in staged.values():
+            shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    for part, tmp in staged.items():
+        final = os.path.join(directory, part)
+        # os.replace cannot overwrite a non-empty directory: move the
+        # old one aside first, then drop it
+        old = os.path.join(directory, f".{part}.{tag}.old")
+        if os.path.exists(final):
+            os.replace(final, old)
+        os.replace(tmp, final)
+        shutil.rmtree(old, ignore_errors=True)
     manifest = {
         "name": index.name,
         "metric": index.metric,
@@ -182,8 +235,10 @@ def save_snapshot(index: api.Index, directory: str,
         "aof_seq": max((r["seq"] for r in aof.records()), default=0)
         if aof else 0,
     }
-    with open(os.path.join(directory, _MANIFEST), "w", encoding="utf-8") as fh:
+    tmp = os.path.join(directory, _MANIFEST + ".tmp")
+    with open(tmp, "w", encoding="utf-8") as fh:
         json.dump(manifest, fh, sort_keys=True, indent=1)
+    os.replace(tmp, os.path.join(directory, _MANIFEST))
 
 
 def load_snapshot(spark: SparkSession, directory: str) -> api.Index:
@@ -213,7 +268,8 @@ def recover(spark: SparkSession, directory: str,
 
 def snapshot_rewrite(index: api.Index, directory: str, aof: AofLog) -> None:
     """Snapshot + truncate the covered AOF prefix — the compaction
-    cycle (lazy_aof.go ReplaceWith)."""
+    cycle (lazy_aof.go ReplaceWith). ``directory`` may be the one the
+    live index was loaded from (see :func:`save_snapshot`)."""
     covered = max((r["seq"] for r in aof.records()), default=0)
     save_snapshot(index, directory, aof=aof)
     aof.rewrite(covered)

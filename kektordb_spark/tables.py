@@ -33,6 +33,7 @@ Views:
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -412,6 +413,211 @@ def data_sized_shuffle_partitions(sf_dir: str) -> int:
     return min(max(n, floor), cap)
 
 
+# ---------------------------------------------------------------------------
+# Persisted index layer: declared as a dependency graph, built concurrently
+# ---------------------------------------------------------------------------
+#
+# The index layer is what a vector store maintains at ingest so queries
+# never re-train or re-encode: the reference builds its HNSW graph at
+# add time, and BASELINE.md reports index BUILD time apart from query
+# speed — the same build/serve split this materialization expresses. On
+# a cluster these ARE tables (bucketed edges: sources/bucketed.py);
+# deriving them per session only happens in this fixture harness. Each
+# relation is written once per (session, sf_dir) as scratch parquet and
+# its temp view re-pointed at the files. Every derivation is a
+# deterministic SQL/DataFrame program over the immutable fixture, and
+# parquet round-trips doubles/longs/strings/binary exactly, so every
+# oracle (which re-derives the same rows in one SQL text) still verifies
+# the full pipeline value-for-value. Disk scratch — unlike a
+# localCheckpoint — survives the inter-query unpersist sweep.
+
+
+def _op(module: str):
+    """Lazily imported operators module (the operators import this one)."""
+    import importlib
+
+    return importlib.import_module(f"kektordb_spark.operators.{module}")
+
+
+def _text_parallelism(spark: SparkSession) -> int:
+    return max(spark.sparkContext.defaultParallelism, 8)
+
+
+def _pq_cand(spark: SparkSession) -> DataFrame:
+    return spark.table("emb").where(F.col("vec_id") >= 5)
+
+
+def _sim_pairs(spark: SparkSession) -> DataFrame:
+    # Similarity-pair index at the lowest threshold any consumer asks
+    # for (contradictions 0.30 <= consolidation 0.40 <= gaps 0.42):
+    # built through the same planner flag queries use (GEMM at fixture
+    # scale, LSH beyond), served by exact post-filter
+    # (knn_planner.similar_pairs serving order). use_index=False: a
+    # re-registration must never read a previous fixture's pair view.
+    kp = _op("knn_planner")
+    return kp.similar_pairs(spark, kp.SIM_PAIRS_MIN, use_index=False,
+                            corpus_size=spark.table("embeddings").count())
+
+
+def _copurch_oriented(spark: SparkSession) -> DataFrame:
+    # repartition before the write: the deg-join chain coalesces to ~1
+    # output partition under AQE at fixture size, and a 1-file copurch_o
+    # caps the census's wedge-probe stage (49M probe rows at sf0.1 — the
+    # query's dominant cost) at the file's row-group count (~2 tasks).
+    # Profiled r7: census 7.3 s -> ~4.4 s at sf0.1 with the partitioned
+    # write.
+    an = _op("analytics")
+    return spark.sql(
+        "WITH deg AS (\n" + an.triangle_deg_sql("copurch_e") + "\n)\n"
+        + an.triangle_oriented_sql("copurch_e", "deg")
+    ).repartition(_text_parallelism(spark))
+
+
+#: view name -> (names of the INDEX_LAYER views its builder reads,
+#: builder). A builder returns the relation to persist; it may read any
+#: base table or plain derived view (registered before the build starts)
+#: and only the index views it declares. Declaration order is submission
+#: priority among ready builders: the two longest chains come first.
+#: Builders share the session, so one that changes session state must
+#: confine the change to itself: ``nng`` is the only one that does —
+#: nsw.nng_descent_build switches spark.sql.constraintPropagation.enabled
+#: off for its loop (semantics-free for every concurrent plan: constraint
+#: propagation only infers extra filters) and restores it, and registers
+#: its private ``_nng_*`` working views.
+INDEX_LAYER: dict[str, tuple[tuple[str, ...], Callable[[SparkSession], DataFrame]]] = {
+    # Navigable k-NN graph (V8's batch analog, operators/nsw.py):
+    # LSH-seeded NN-descent — every stage a bucketed equi-join, never an
+    # all-pairs sweep; the beam serve path reads only this adjacency +
+    # the vector join. The longest single builder.
+    "nng": ((), lambda s: _op("nsw").nng_descent_build(s)),
+    # Packed GEMM tile blocks over the embeddings corpus — the block
+    # layout every blocked-similarity query (consolidation pairs,
+    # knowledge gaps, contradictions, embedding dedup, batch kNN)
+    # derives identically; FAISS-style block storage next to the rows.
+    "gemm_blocks_8": ((), lambda s: _op("blockgemm").packed_blocks(
+        s.table("embeddings").select("vec_id", F.col("embedding").alias("vec")), 8)),
+    "sim_pairs_030": (("gemm_blocks_8",), _sim_pairs),
+    # Persisted component labels over the OLD similarity graph (pairs
+    # among non-arrival nodes): components_merge_df folds an arrival
+    # wave into THESE labels without re-reading the old edges.
+    "comp_labels": (("sim_pairs_030",), lambda s: _op("components").component_labels(
+        s, _op("components").old_pairs_df(s))),
+    # The edges view re-derives two lineitem scans + string building
+    # per reference, docs_tok_par re-tokenizes per reference.
+    "edges": ((), lambda s: s.table("edges")),
+    "docs_tok_par": ((), lambda s: s.table("docs_tok_par")),
+    # PageRank transition weights w(u,v) = cnt/outdeg(u), and the
+    # current-edge relation (latest active version per (src, dst, rel)):
+    # the adjacency-layout and "current snapshot" companions of the
+    # versioned edge log.
+    "pr_w": (("edges",), lambda s: _op("pagerank").transition_weights(s.table("edges"))),
+    "edges_cur": (("edges",), lambda s: s.sql(_op("consolidation").ecur_sql("spark"))),
+    # IVF coarse quantizer (centroids + inverted assignment) and the PQ
+    # codebooks / byte codes.
+    "ivf_cents": ((), lambda s: s.sql(_op("ivf").ivf_train_sql("spark"))),
+    "ivf_assign": (("ivf_cents",), lambda s: s.sql(
+        "WITH tc AS (SELECT cid, v FROM ivf_cents),\n"
+        + _op("ivf")._assign_cte("spark", "tc", "inv")
+        + "\nSELECT vec_id, cid FROM inv")),
+    "pq_cb_full": ((), lambda s: _op("pq").pq_train(s.table("emb"), m=8, k=32, iters=0)),
+    "pq_codes_full": (("pq_cb_full",), lambda s: _op("pq").pq_encode(
+        s.table("emb"), s.table("pq_cb_full"), m=8)),
+    "pq_cb_cand": ((), lambda s: _op("pq").pq_train(_pq_cand(s), m=8, k=16, iters=0)),
+    "pq_codes_cand": (("pq_cb_cand",), lambda s: _op("pq").pq_encode(
+        _pq_cand(s), s.table("pq_cb_cand"), m=8)),
+    "lsh_sig": ((), lambda s: _op("knn").lsh_signatures(s.table("emb"), id_col="vec_id")),
+    # Dedup signature indexes — the ingest-time fingerprint layer:
+    # MinHash shingle arrays / postings / K-hash signatures, and the
+    # PPJoin gram arrays / postings / prefix relation.
+    "mh_arr": (("docs_tok_par",), lambda s: s.sql(
+        _op("dedup").minhash_arr_sql("spark", source="docs_tok_par"))),
+    "mh_ex": (("mh_arr",), lambda s: s.sql(
+        _op("dedup").minhash_ex_from_arr_sql("spark", source="mh_arr"))),
+    "mh_sig": (("mh_ex",), lambda s: s.sql(
+        _op("dedup").minhash_sig_sql("spark", ex_source="mh_ex"))),
+    "ng_arr": ((), lambda s: s.sql(
+        _op("dedup").ngram_arr_sql("spark", source="documents_par"))),
+    "ng_ex": (("ng_arr",), lambda s: s.sql(
+        _op("dedup").ngram_ex_from_arr_sql("spark", source="ng_arr"))),
+    "ng_pref": (("ng_ex", "ng_arr"), lambda s: s.sql(
+        _op("dedup").ngram_pref_sql("spark", ex_source="ng_ex", arr_source="ng_arr"))),
+    # Co-purchase item graph (distinct part pairs sharing an order) and
+    # its degree-oriented edge set — the market-basket graph beside the
+    # order log; pair generation is the triangle census's dominant stage
+    # (Suri-Vassilvitskii orientation bounds wedge fan-out by sqrt(m)).
+    "copurch_w": ((), lambda s: s.sql(_op("kcore").copurch_weighted_sql())),
+    "copurch_e": (("copurch_w",), lambda s: s.table("copurch_w").select("pa", "pb")),
+    "copurch_o": (("copurch_e",), _copurch_oriented),
+    # Per-label centroids — the outlier audit's serve side
+    # (analytics.embedding_outliers_sql), same 1e-12 re-sync as ivf_cents.
+    "label_cents": ((), lambda s: s.sql(
+        "WITH " + _op("ivf")._mean_cte("spark", "emb", "lc", cid="label")
+        + "\nSELECT label, v FROM lc")),
+}
+
+#: concurrent index builders. Fixed, not core-derived: the builders are
+#: bound by driver-side planning and job scheduling, so a few of them
+#: keep the task slots busy at any core count.
+_BUILD_WORKERS = 4
+
+
+def build_index_layer(spark: SparkSession, mat_dir: str) -> None:
+    """Materialize every :data:`INDEX_LAYER` relation as parquet under
+    ``mat_dir`` and re-point its temp view at the files. A builder is
+    submitted once every view it declares is registered; among ready
+    builders the earliest declared goes first, at most
+    ``_BUILD_WORKERS`` at a time. After the first failure nothing new
+    is submitted; the running builders drain and the failure is
+    re-raised."""
+    from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
+
+    from pyspark import inheritable_thread_target
+
+    jvm_session = spark._jvm.org.apache.spark.sql.SparkSession
+
+    def build(name: str) -> None:
+        # The pool thread's JVM peer has no active session, and
+        # SQLConf.get there would read defaults (200 shuffle
+        # partitions, the JVM time zone) for anything resolved outside
+        # a session scope.
+        jvm_session.setActiveSession(spark._jsparkSession)
+        path = f"{mat_dir}/{name}"
+        INDEX_LAYER[name][1](spark).write.mode("overwrite").parquet(path)
+        spark.read.parquet(path).createOrReplaceTempView(name)
+
+    pending = list(INDEX_LAYER)
+    done: set[str] = set()
+    running: dict = {}
+    error: BaseException | None = None
+    with ThreadPoolExecutor(_BUILD_WORKERS, thread_name_prefix="index-build") as pool:
+        while True:
+            while error is None and len(running) < _BUILD_WORKERS:
+                ready = next((n for n in pending
+                              if done.issuperset(INDEX_LAYER[n][0])), None)
+                if ready is None:
+                    break
+                pending.remove(ready)
+                # Wrapped here, on the caller's thread, once per build:
+                # each build gets its own copy of the caller's local
+                # properties (job group, scheduler pool), which Spark's
+                # own per-job properties are then set on.
+                target = inheritable_thread_target(spark)(build)
+                running[pool.submit(target, ready)] = ready
+            if not running:
+                break
+            finished, _ = wait(running, return_when=FIRST_COMPLETED)
+            for fut in finished:
+                name = running.pop(fut)
+                if fut.exception() is None:
+                    done.add(name)
+                elif error is None:
+                    error = fut.exception()
+    if error is not None:
+        raise error
+    if pending:
+        raise ValueError(f"index layer views with unmet dependencies: {pending}")
+
+
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Read base parquet tables and register them + derived views as temp
     views. Returns dict of base DataFrames.
@@ -426,13 +632,34 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     immutable reads over immutable fixtures, and re-registering costs
     ~1.4 s of parse/analyze roundtrips — across a 75-query bench run
     that re-registration was HALF the total wall clock. Switching
-    sf_dir in the same session re-registers everything."""
+    sf_dir in the same session re-registers everything.
+
+    The persisted index layer (the 25 :data:`INDEX_LAYER` relations:
+    edges, IVF/PQ/LSH codes, sim-pairs, the NSW graph, dedup
+    signatures, ...) is built as a dependency graph, not a straight
+    line: each builder writes its parquet and re-points its view as
+    soon as the views it reads are registered, up to
+    ``_BUILD_WORKERS`` at a time (:func:`build_index_layer`). Most
+    builders are small jobs bound by driver-side planning, so a serial
+    build leaves the task slots idle most of the time. The critical
+    path is ``nng`` (LSH-seeded NN-descent, one checkpointed job per
+    round) and ``gemm_blocks_8 -> sim_pairs_030 -> comp_labels``; both
+    are declared first, so they start first and never queue behind
+    short builders. Each worker inherits the caller's local
+    properties (``pyspark.inheritable_thread_target``), so every build
+    job runs under the caller's job group and scheduler pool:
+    ``cancelJobGroup`` stops the whole build and per-group job/task
+    counts cover it. The first builder failure is re-raised once the
+    running builders drain, and the registration memo stays unset."""
     for jrdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
         jrdd.unpersist()
     sid = id(spark)
     prev = _REGISTERED.get(sid)
     if prev is not None and prev[0] == sf_dir:
         return prev[1]
+    # unset until the new registration is complete: a failed build
+    # must not leave a memo naming views it already replaced
+    _REGISTERED.pop(sid, None)
     # Size the initial reduce-partition count to the DATA, not the core
     # count (guide §2.1: partitions track data volume; a core-derived
     # count over-parallelizes small inputs — measured r7: BPE train/
@@ -474,173 +701,16 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     # the file count provides this parallelism for free; here an
     # explicit round-robin repartition stands in for it. Semantically
     # identical to documents/docs_tok.
-    par = max(spark.sparkContext.defaultParallelism, 8)
-    out["documents"].repartition(par).createOrReplaceTempView("documents_par")
+    out["documents"].repartition(_text_parallelism(spark)).createOrReplaceTempView(
+        "documents_par")
     spark.sql(
         docs_tok_view_sql("spark", source="documents_par")
     ).createOrReplaceTempView("docs_tok_par")
-    # Materialize the two EXPENSIVE derived relations once per
-    # (session, sf_dir) as scratch parquet and re-point their views at
-    # the files: the edges view re-derives two lineitem scans + string
-    # building per reference (graph queries each paid ~2 s), and
-    # docs_tok_par re-tokenizes per reference. Parquet round-trips
-    # doubles/longs/strings exactly, so oracle parity is unaffected
-    # (the DuckDB CTE derives the same rows). Disk scratch — unlike a
-    # localCheckpoint — survives the inter-query unpersist sweep. On a
-    # cluster these ARE tables (bucketed edges: sources/bucketed.py);
-    # deriving them per query only happens in this fixture harness.
     import tempfile
 
     mat_dir = tempfile.mkdtemp(prefix="kektordb_mat_")
     _swap_scratch_dir(sid, mat_dir)
-    for vname in ("edges", "docs_tok_par"):
-        path = f"{mat_dir}/{vname}"
-        spark.table(vname).write.mode("overwrite").parquet(path)
-        spark.read.parquet(path).createOrReplaceTempView(vname)
-    # Packed GEMM tile blocks over the embeddings corpus — the block
-    # layout every blocked-similarity query (consolidation pairs,
-    # knowledge gaps, contradictions, embedding dedup, batch kNN)
-    # derives identically from the immutable fixture. On a cluster this
-    # is the persisted block-packed vector table a brute-force layer
-    # maintains next to the row layout (FAISS-style storage); deriving
-    # it per query only happens in this fixture harness. Binary blobs
-    # round-trip parquet exactly, so kernel results are unchanged.
-    from kektordb_spark.operators.blockgemm import GEMM_BLOCKS_VIEW, packed_blocks
-
-    gpath = f"{mat_dir}/gemm_blocks"
-    packed_blocks(
-        out["embeddings"].select("vec_id", F.col("embedding").alias("vec")), 8
-    ).write.mode("overwrite").parquet(gpath)
-    spark.read.parquet(gpath).createOrReplaceTempView(GEMM_BLOCKS_VIEW)
-    # Persisted ANN index layer: the IVF coarse quantizer (centroids +
-    # inverted assignment) and the PQ codebooks/byte codes — what a
-    # vector store maintains at ingest so queries never re-train/
-    # re-encode (the reference builds its HNSW graph at add time;
-    # BASELINE.md reports index BUILD time separately from QPS, the
-    # same build/serve split this materialization expresses). All
-    # derivations are deterministic SQL/DataFrame programs over the
-    # immutable fixture, and parquet round-trips doubles/ints exactly,
-    # so every oracle still verifies the full pipeline value-for-value.
-    from kektordb_spark.operators import pq as _PQ
-    from kektordb_spark.operators.ivf import _assign_cte, ivf_train_sql
-
-    def _mat(name: str, df: DataFrame) -> None:
-        path = f"{mat_dir}/{name}"
-        df.write.mode("overwrite").parquet(path)
-        spark.read.parquet(path).createOrReplaceTempView(name)
-
-    _mat("ivf_cents", spark.sql(ivf_train_sql("spark")))
-    _mat("ivf_assign", spark.sql(
-        "WITH tc AS (SELECT cid, v FROM ivf_cents),\n"
-        + _assign_cte("spark", "tc", "inv")
-        + "\nSELECT vec_id, cid FROM inv"
-    ))
-    embv = spark.table("emb")
-    _mat("pq_cb_full", _PQ.pq_train(embv, m=8, k=32, iters=0))
-    _mat("pq_codes_full",
-         _PQ.pq_encode(embv, spark.table("pq_cb_full"), m=8))
-    cand = embv.where(F.col("vec_id") >= 5)
-    _mat("pq_cb_cand", _PQ.pq_train(cand, m=8, k=16, iters=0))
-    _mat("pq_codes_cand",
-         _PQ.pq_encode(cand, spark.table("pq_cb_cand"), m=8))
-    from kektordb_spark.operators.knn import lsh_signatures
-
-    _mat("lsh_sig", lsh_signatures(embv, id_col="vec_id"))
-    # PageRank transition-weight relation w(u,v) = cnt/outdeg(u): a
-    # static derivation of the immutable edge snapshot, maintained as
-    # an adjacency-layout table beside the edge log on a cluster
-    # (operators/pagerank.py transition_weights docstring).
-    from kektordb_spark.operators.pagerank import transition_weights
-
-    _mat("pr_w", transition_weights(spark.table("edges")))
-    # Similarity-pair index at the lowest threshold any consumer asks
-    # for (contradictions 0.30 <= consolidation 0.40 <= gaps 0.42):
-    # built through the same planner flag queries use (GEMM at fixture
-    # scale, LSH beyond), served by exact post-filter
-    # (knn_planner.similar_pairs serving order).
-    from kektordb_spark.operators import knn_planner as _KP
-
-    _mat(
-        _KP.SIM_PAIRS_VIEW,
-        _KP.similar_pairs(spark, _KP.SIM_PAIRS_MIN, use_index=False,
-                          corpus_size=out["embeddings"].count()),
-    )
-    # Current-edge relation (latest active version per (src, dst, rel)
-    # — consolidation.ecur_sql): the versioned edge log's "current
-    # snapshot" materialized view, the standard companion table of any
-    # SCD-style log.
-    from kektordb_spark.operators.consolidation import ecur_sql as _ecur_sql
-
-    _mat("edges_cur", spark.sql(_ecur_sql("spark")))
-    # Dedup signature indexes — the ingest-time fingerprint layer the
-    # incremental-dedup query already models ("corpus signatures are a
-    # persisted index"): MinHash shingle arrays / postings / K-hash
-    # signatures, and the PPJoin gram arrays / postings / prefix
-    # relation. Static derivations of the immutable document fixture;
-    # every oracle re-derives them end-to-end in one SQL text.
-    from kektordb_spark.operators import dedup as _DD
-
-    _mat("mh_arr", spark.sql(_DD.minhash_arr_sql("spark", source="docs_tok_par")))
-    _mat("mh_ex", spark.sql(_DD.minhash_ex_from_arr_sql("spark", source="mh_arr")))
-    _mat("mh_sig", spark.sql(_DD.minhash_sig_sql("spark", ex_source="mh_ex")))
-    _mat("ng_arr", spark.sql(_DD.ngram_arr_sql("spark", source="documents_par")))
-    _mat("ng_ex", spark.sql(_DD.ngram_ex_from_arr_sql("spark", source="ng_arr")))
-    _mat("ng_pref", spark.sql(
-        _DD.ngram_pref_sql("spark", ex_source="ng_ex", arr_source="ng_arr")
-    ))
-    # Co-purchase item graph (distinct part pairs sharing an order) and
-    # its degree-oriented edge set — the market-basket graph a
-    # recommender/graph-analytics build maintains beside the order log
-    # (same static-derivation argument as pr_w/edges_cur; Suri-
-    # Vassilvitskii orientation bounds wedge fan-out by sqrt(m)).
-    # Pair generation is the triangle census's dominant stage; building
-    # it once here is the build/serve split the whole index layer
-    # expresses. The oracle still derives everything from lineitem in
-    # one SQL text.
-    from kektordb_spark.operators import analytics as _AN
-    from kektordb_spark.operators.kcore import copurch_weighted_sql
-
-    _mat("copurch_w", spark.sql(copurch_weighted_sql()))
-    _mat("copurch_e", spark.table("copurch_w").select("pa", "pb"))
-    # Per-label centroids (#labels rows) — the outlier audit's serve
-    # side (analytics.embedding_outliers_sql), same build/serve split
-    # and 1e-12 re-sync as ivf_cents.
-    from kektordb_spark.operators.ivf import _mean_cte as _ivf_mean_cte
-
-    _mat("label_cents", spark.sql(
-        "WITH " + _ivf_mean_cte("spark", "emb", "lc", cid="label")
-        + "\nSELECT label, v FROM lc"
-    ))
-    # Persisted component labels over the OLD similarity graph (pairs
-    # among non-arrival nodes) — the graph-state side of the
-    # incremental-maintenance family: components_merge_df folds an
-    # arrival wave into THESE labels without re-reading the old edges
-    # (operators/components.py). Derived from the sim-pair index just
-    # materialized above.
-    from kektordb_spark.operators import components as _CC
-
-    _mat("comp_labels", _CC.component_labels(
-        spark, _CC.old_pairs_df(spark)))
-    # Navigable k-NN graph (V8's batch analog, operators/nsw.py):
-    # LSH-seeded NN-descent at build time — every stage a bucketed
-    # equi-join, never an all-pairs sweep (the GEMM exact build stays
-    # available as blockgemm.knn_all for small corpora / ground truth);
-    # the beam serve path reads only this adjacency + the vector join.
-    from kektordb_spark.operators.nsw import nng_descent_build
-
-    _mat("nng", nng_descent_build(spark))
-    # repartition(par) before the write: the deg-join chain coalesces
-    # to ~1 output partition under AQE at fixture size, and a 1-file
-    # copurch_o caps the census's wedge-probe stage (49M probe rows at
-    # sf0.1 — the query's dominant cost) at the file's row-group count
-    # (~2 tasks). Profiled r7: census 7.3 s -> ~4.4 s at sf0.1 with
-    # the partitioned write; this was the r6 'triangle drift' — the
-    # r5/r6 copurch_w->copurch_e re-layering changed the writing
-    # plan's partitioning, not the census code.
-    _mat("copurch_o", spark.sql(
-        "WITH deg AS (\n" + _AN.triangle_deg_sql("copurch_e") + "\n)\n"
-        + _AN.triangle_oriented_sql("copurch_e", "deg")
-    ).repartition(par))
+    build_index_layer(spark, mat_dir)
     _REGISTERED[sid] = (sf_dir, out)
     return out
 

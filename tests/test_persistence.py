@@ -5,6 +5,8 @@ marked n/a-by-design, now implemented as reference-shaped facades."""
 from __future__ import annotations
 
 import json
+import os
+from dataclasses import replace
 
 import pytest
 
@@ -141,6 +143,72 @@ def test_snapshot_rewrite_truncates_covered_prefix(spark, tmp_path):
     assert seq == 2  # sequence numbering continues past the rewrite
     ix = api.vdelete(ix, ["doc002"], now=101)
     assert _state(P.recover(spark, d)) == _state(ix)
+
+
+def _edges(ix):
+    return sorted(tuple(r) for r in ix.edges.select(
+        "src", "dst", "rel", "weight", "created_at", "deleted_at").collect())
+
+
+def test_snapshot_rewrite_in_place_over_its_own_input(spark, tmp_path):
+    """Compaction into the directory the live index was loaded from:
+    the new snapshot is written in full before it replaces the files
+    the index reads, so nothing is lost and no staging dir is left."""
+    d = str(tmp_path / "s")
+    log = P.AofLog(d)
+    P.snapshot_rewrite(_build_index(spark), d, log)
+    live = P.load_snapshot(spark, d)
+    log.append("delete", now=101, ids=["doc002"])
+    live = api.vdelete(live, ["doc002"], now=101)
+    log.append("link", now=102, src="doc001", dst="doc003", rel="ref")
+    live = api.vlink(live, "doc001", "doc003", "ref", now=102)
+    want, want_edges = _state(live), _edges(live)
+
+    P.snapshot_rewrite(live, d, log)  # reads d/vectors, writes d/vectors
+
+    assert log.records() == []
+    got = P.load_snapshot(spark, d)
+    assert _state(got) == want and _edges(got) == want_edges
+    assert _state(P.recover(spark, d)) == want
+    assert sorted(os.listdir(d)) == ["aof.jsonl", "edges", "manifest.json", "vectors"]
+
+
+def test_recover_folds_consecutive_links_into_batches(spark, tmp_path, monkeypatch):
+    """recover() over 8 logged links equals the live index that applied
+    them one vlink at a time, and replays them as 2 vlink_batch calls:
+    one run, cut where a (src, dst, rel) key repeats (link 5 re-links
+    link 1's key with a new weight). Link 8 repeats link 2's key with
+    the same weight in the next run: a no-op, as when applied live."""
+    d = str(tmp_path / "s")
+    log = P.AofLog(d)
+    live = _build_index(spark)
+    P.save_snapshot(live, d, aof=log)
+    links = [
+        ("doc000", "doc001", "ref", 1.0, None),
+        ("doc001", "doc002", "ref", 1.0, "ref_by"),
+        ("doc002", "doc003", "ref", 2.0, None),
+        ("doc003", "doc004", "ref", 1.0, None),
+        ("doc000", "doc001", "ref", 3.0, None),
+        ("doc004", "doc005", "ref", 1.0, None),
+        ("doc005", "doc006", "ref", 1.0, None),
+        ("doc001", "doc002", "ref", 1.0, "ref_by"),
+    ]
+    for now, (s, t, rel, w, inv) in enumerate(links, start=200):
+        log.append("link", now=now, src=s, dst=t, rel=rel, weight=w,
+                   **({"inverse": inv} if inv else {}))
+        live = api.vlink(live, s, t, rel, now=now, weight=w, inverse=inv)
+        # flat lineage for the live side: one vlink at a time is the
+        # exponential plan the replay must avoid
+        live = replace(live, edges=live.edges.localCheckpoint())
+
+    calls = []
+    batch = api.vlink_batch
+    monkeypatch.setattr(api, "vlink_batch",
+                        lambda ix, rows, now: calls.append(len(rows)) or batch(ix, rows, now))
+    got = P.recover(spark, d)
+    assert calls == [5, 5]
+    assert _edges(got) == _edges(live)
+    assert _state(got) == _state(live)
 
 
 def test_aof_rejects_unknown_op(tmp_path):
