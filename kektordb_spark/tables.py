@@ -599,8 +599,9 @@ def build_index_layer(spark: SparkSession, mat_dir: str) -> None:
                 pending.remove(ready)
                 # Wrapped here, on the caller's thread, once per build:
                 # each build gets its own copy of the caller's local
-                # properties (job group, scheduler pool), which Spark's
-                # own per-job properties are then set on.
+                # properties (job group, scheduler pool). One copy
+                # shared by concurrent builds would mix the per-query
+                # properties Spark sets on it (the SQL execution id).
                 target = inheritable_thread_target(spark)(build)
                 running[pool.submit(target, ready)] = ready
             if not running:
